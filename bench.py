@@ -11,23 +11,24 @@ Prints ONE JSON line:
    "images_per_sec": <pipeline throughput>, "cpus": N, ...}
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_IMAGES (default
-60000), SPARK_GRAFT_BENCH_REPEATS (default 2).
+SPARK_GRAFT_CPUS (default: the cores this process may run on),
+SPARK_GRAFT_BENCH_IMAGES (default 480000), SPARK_GRAFT_BENCH_REPEATS
+(default 3). Every timing follows the steal-gated protocol of
+tools/timing.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cdr_analysis_tools_hadoop_spark import pipeline
 from cdr_analysis_tools_hadoop_spark.session import build_session
 from cdr_analysis_tools_hadoop_spark.sources import synthetic
+from tools import timing
 
 HEADLINE = [
     "zone_population",
@@ -60,52 +61,11 @@ IMAGES_LAYOUT = "v3"  # bump when file count / codec / content changes
 # v3: second coprime residue in the synthetic pixel pattern (period fix)
 
 
-def _cpu_jiffies() -> list[int]:
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:]))
-
-
-#: steal/(steal+busy) per timed run above which the run is DIRTY —
-#: same clean-window rule as tools/scaling_bench.py / sf1_bench.py
-STEAL_MAX_PCT = 2.5
-
-
-def _timed_clean(fn, repeats: int, max_attempts: int) -> tuple[float, bool]:
-    """(seconds, dirty) for a query under co-tenant noise.
-
-    This shared host gets multi-minute hypervisor-steal bursts that
-    slow identical runs 2-10x (a whole r4 bench run once recorded
-    18.7% host steal and a 10x-inflated flagship), so each timed run
-    carries its own /proc/stat steal reading: sample until `repeats`
-    CLEAN runs (steal <= STEAL_MAX_PCT) or `max_attempts`, report the
-    median of clean runs; when a burst outlasts the attempt budget,
-    fall back to the MINIMUM over all attempts (the least-contaminated
-    observation — for a deterministic job, noise only ever adds time)
-    and say so via the dirty flag."""
-    samples: list[tuple[float, bool]] = []
-    n_clean = 0
-    while n_clean < repeats and len(samples) < max_attempts:
-        a = _cpu_jiffies()
-        t0 = time.time()
-        fn()
-        dt = time.time() - t0
-        b = _cpu_jiffies()
-        d = [y - x for x, y in zip(a, b)]
-        busy = d[0] + d[1] + d[2] + d[5] + d[6]
-        steal_pct = 100.0 * d[7] / max(d[7] + busy, 1)
-        clean = steal_pct <= STEAL_MAX_PCT
-        samples.append((dt, clean))
-        if clean:
-            n_clean += 1
-    clean_runs = [s for s, c in samples if c]
-    if len(clean_runs) >= min(2, repeats):
-        return statistics.median(clean_runs), False
-    return min(s for s, _ in samples), True
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "480000"))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -123,7 +83,7 @@ def main() -> None:
     # half-warm level wrecks the N vs 4N efficiency comparison.
     for _ in range(2):
         pipeline.run_pipeline(spark, images).count()
-    pipe_sec, pipe_dirty = _timed_clean(
+    _, pipe_sec, pipe_dirty = timing.timed_clean(
         lambda: pipeline.run_pipeline(spark, images).count(),
         repeats,
         max_attempts=2 * repeats,
@@ -132,7 +92,7 @@ def main() -> None:
     # --- headline analytics queries ---
     import __spark_entry__ as entrymod
 
-    cpu0 = _cpu_jiffies()
+    cpu0 = timing.cpu_jiffies()
     qs = entrymod.queries()
     q_times: dict[str, float] = {}
     dirty_queries: list[str] = []
@@ -145,11 +105,11 @@ def main() -> None:
         # one warm-up execution (the first action of a query shape
         # pays JIT/codegen-compile/worker-spawn that a resident engine
         # would not), then steal-gated clean-median timing — see
-        # _timed_clean. Each run builds a FRESH plan: re-collecting
+        # tools/timing.py. Each run builds a FRESH plan: re-collecting
         # the same DataFrame would reuse AQE stages and measure
         # nothing.
         qs[name](spark, sf_dir).count()
-        sec, dirty = _timed_clean(
+        _, sec, dirty = timing.timed_clean(
             lambda: qs[name](spark, sf_dir).count(),
             repeats,
             max_attempts=2 * repeats,
@@ -174,7 +134,7 @@ def main() -> None:
         _traj.od_sum(_traj.od_edges(frame, home)).count()
 
     def _skew_entry(key: str, fn) -> None:
-        sec, dirty = _timed_clean(fn, repeats, max_attempts=2 * repeats)
+        _, sec, dirty = timing.timed_clean(fn, repeats, max_attempts=2 * repeats)
         skew[key] = round(sec, 3)
         if dirty:
             dirty_queries.append(key)
@@ -220,9 +180,7 @@ def main() -> None:
     # this shared host gets multi-minute co-tenant bursts that slow
     # identical runs 2-4x (see BENCH/BASELINE.md); the number lets a
     # reader normalize a steal-contaminated bench record
-    d = [y - x for x, y in zip(cpu0, _cpu_jiffies())]
-    busy = d[0] + d[1] + d[2] + d[5] + d[6]
-    steal_pct = round(100.0 * d[7] / max(d[7] + busy, 1), 1)
+    steal_pct = round(timing.steal_pct(cpu0, timing.cpu_jiffies()), 1)
     print(
         json.dumps(
             {

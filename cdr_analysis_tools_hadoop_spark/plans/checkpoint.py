@@ -57,10 +57,6 @@ def read_manifest(path: str) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def committed_partitions(path: str) -> set[str]:
-    return {m["partition"] for m in read_manifest(path) if m.get("status") == "committed"}
-
-
 def lineage_fingerprint(df: DataFrame) -> str:
     return files_fingerprint(sorted(df.inputFiles()))
 

@@ -8,18 +8,24 @@ from __future__ import annotations
 
 import csv
 import json
+import os
 
 import pytest
 
 from cdr_analysis_tools_hadoop_spark import cli
 
-GOLDENS = "/root/reference/Statistics/output_reports"
+CONFIG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "configs",
+    "sample_config.json",
+)
 
 
 @pytest.fixture(scope="module")
-def cfg(tmp_path_factory):
+def cfg(tmp_path_factory, reference_dir):
     root = tmp_path_factory.mktemp("cli_run")
-    base = json.load(open("/root/repo/configs/sample_config.json"))
+    base = json.load(open(CONFIG))
+    base["data_path"] = f"{reference_dir}/Sample_Inputs"
     base["output_data_location"] = str(root / "warehouse")
     base["output_report_location"] = str(root / "output_reports")
     base["output_graph_location"] = str(root / "output_graphs")
@@ -41,47 +47,47 @@ def _read(path):
         return [r for r in csv.reader(f) if r]
 
 
-def test_cli_reproduces_file_data_stat_golden(ran):
+def test_cli_reproduces_file_data_stat_golden(ran, goldens):
     conf, _ = ran
     got = _read(f"{conf['output_report_location']}/css_file_data_stat.csv")
-    want = _read(f"{GOLDENS}/css_file_data_stat.csv")
+    want = _read(f"{goldens}/css_file_data_stat.csv")
     assert got == want
 
 
-def test_cli_reproduces_daily_golden(ran):
+def test_cli_reproduces_daily_golden(ran, goldens):
     conf, _ = ran
     got = _read(f"{conf['output_report_location']}/css_provider_data_stat_daily.csv")
-    want = _read(f"{GOLDENS}/css_provider_data_stat_daily.csv")
+    want = _read(f"{goldens}/css_provider_data_stat_daily.csv")
     assert got[0] == want[0]
     assert sorted(map(tuple, got[1:])) == sorted(map(tuple, want[1:]))
 
 
-def test_cli_reproduces_monthly_golden(ran):
+def test_cli_reproduces_monthly_golden(ran, goldens):
     conf, _ = ran
     got = _read(
         f"{conf['output_report_location']}/css_provider_data_stat_monthly.csv"
     )
-    want = _read(f"{GOLDENS}/css_provider_data_stat_monthly.csv")
+    want = _read(f"{goldens}/css_provider_data_stat_monthly.csv")
     assert got[0] == want[0]
     assert sorted(map(tuple, got[1:])) == sorted(map(tuple, want[1:]))
 
 
-def test_cli_reproduces_zone_goldens(ran):
+def test_cli_reproduces_zone_goldens(ran, goldens):
     conf, _ = ran
     for level in ("ADMIN1", "ADMIN2"):
         got = _read(
             f"{conf['output_report_location']}/"
             f"zone_based_aggregations_level_{level}.csv"
         )
-        want = _read(f"{GOLDENS}/zone_based_aggregations_level_{level}.csv")
+        want = _read(f"{goldens}/zone_based_aggregations_level_{level}.csv")
         assert got[0] == want[0], level
         assert sorted(map(tuple, got[1:])) == sorted(map(tuple, want[1:])), level
 
 
-def test_cli_reproduces_summary_golden(ran):
+def test_cli_reproduces_summary_golden(ran, goldens):
     conf, _ = ran
     got = _read(f"{conf['output_report_location']}/summary_stats.csv")
-    want = _read(f"{GOLDENS}/summary_stats.csv")
+    want = _read(f"{goldens}/summary_stats.csv")
     assert got == want
 
 

@@ -1,9 +1,11 @@
 """End-to-end parity against the reference's OWN sample inputs and
 checked-in golden outputs (SURVEY.md §5):
 
-    /root/reference/Sample_Inputs/cdr_sample.csv      (17 rows)
-    /root/reference/Sample_Inputs/mapping_sample.csv  (8 towers)
-    /root/reference/Statistics/output_reports/*.csv   (goldens)
+    Sample_Inputs/cdr_sample.csv      (17 rows)
+    Sample_Inputs/mapping_sample.csv  (8 towers)
+    Statistics/output_reports/*.csv   (goldens)
+
+read from the ``reference_dir`` fixture (tests/conftest.py).
 
 The engine ingests the raw CSVs through the config-driven projection
 compiler (faithful mode: '-1' sentinel fills, like the reference's
@@ -22,20 +24,17 @@ from pyspark.sql import functions as F
 from cdr_analysis_tools_hadoop_spark.operators import prepare
 from cdr_analysis_tools_hadoop_spark.sources import csv_io
 
-SAMPLES = "/root/reference/Sample_Inputs"
-GOLDENS = "/root/reference/Statistics/output_reports"
 
-
-def _read_golden(name: str) -> list[list[str]]:
-    with open(f"{GOLDENS}/{name}", newline="") as f:
+def _read_golden(goldens: str, name: str) -> list[list[str]]:
+    with open(f"{goldens}/{name}", newline="") as f:
         return [row for row in csv.reader(f) if row]
 
 
 @pytest.fixture(scope="module")
-def cdr(spark):
+def cdr(spark, reference_dir):
     raw = csv_io.read_csv_all_string(
         spark,
-        f"{SAMPLES}/cdr_sample.csv",
+        f"{reference_dir}/Sample_Inputs/cdr_sample.csv",
         ["SUBID", "CDATE", "CTIME", "DURATION", "CELLID",
          "LATITUDE", "LONGITUDE", "network_type", "call_type"],
         header=True,
@@ -64,10 +63,10 @@ def cdr(spark):
 
 
 @pytest.fixture(scope="module")
-def towers(spark):
+def towers(spark, reference_dir):
     raw = csv_io.read_csv_all_string(
         spark,
-        f"{SAMPLES}/mapping_sample.csv",
+        f"{reference_dir}/Sample_Inputs/mapping_sample.csv",
         ["BTSID", "SITE_NAME", "longitude", "latitude", "cell_id",
          "CELLNAME", "CI", "AZIMUTH", "admin1", "admin2"],
         header=True,
@@ -75,13 +74,13 @@ def towers(spark):
     return raw.select("cell_id", "latitude", "longitude", "admin1", "admin2")
 
 
-def test_file_data_stat_golden(cdr):
+def test_file_data_stat_golden(cdr, goldens):
     """The LIBRARY data_statistics (faithful mode, imei/imsi fragments
     auto-injected because the sample maps them) reproduces
     css_file_data_stat.csv byte-for-byte, including column order."""
     from cdr_analysis_tools_hadoop_spark.operators import statistics
 
-    g = _read_golden("css_file_data_stat.csv")
+    g = _read_golden(goldens, "css_file_data_stat.csv")
     want = dict(zip(g[0], g[1]))
     out = statistics.data_statistics(cdr, faithful=True)
     assert out.columns == list(g[0])
@@ -112,8 +111,8 @@ def _grain_rows(cdr, keys, ct, nt):
     )
 
 
-def test_daily_statistics_golden(cdr):
-    g = _read_golden("css_provider_data_stat_daily.csv")
+def test_daily_statistics_golden(cdr, goldens):
+    g = _read_golden(goldens, "css_provider_data_stat_daily.csv")
     want = {tuple(row) for row in g[1:]}
     ct, nt = F.col("call_type"), F.col("network_type")
     out = (
@@ -126,8 +125,8 @@ def test_daily_statistics_golden(cdr):
     assert got == want
 
 
-def test_monthly_statistics_golden(cdr):
-    g = _read_golden("css_provider_data_stat_monthly.csv")
+def test_monthly_statistics_golden(cdr, goldens):
+    g = _read_golden(goldens, "css_provider_data_stat_monthly.csv")
     want = {tuple(row) for row in g[1:]}
     # Reference quirk Q8 (monthly_statistics.sql WHERE clause): the
     # month window is month(pdt) BETWEEN start_month AND end_month
@@ -176,8 +175,8 @@ def test_monthly_statistics_golden(cdr):
     assert got == want
 
 
-def test_zone_population_admin1_golden(cdr, towers):
-    g = _read_golden("zone_based_aggregations_level_ADMIN1.csv")
+def test_zone_population_admin1_golden(cdr, towers, goldens):
+    g = _read_golden(goldens, "zone_based_aggregations_level_ADMIN1.csv")
     want = {tuple(row) for row in g[1:]}
     out = (
         cdr.join(
@@ -193,8 +192,8 @@ def test_zone_population_admin1_golden(cdr, towers):
     assert got == want
 
 
-def test_summary_stats_golden(cdr):
-    rows = {r[0]: r[1] for r in _read_golden("summary_stats.csv") if len(r) == 2}
+def test_summary_stats_golden(cdr, goldens):
+    rows = {r[0]: r[1] for r in _read_golden(goldens, "summary_stats.csv") if len(r) == 2}
     days = cdr.select(F.to_date("call_time").alias("d")).distinct().count()
     total = cdr.count()
     voice = cdr.filter(F.col("call_type") == "VOICE").count()
@@ -211,7 +210,7 @@ def test_summary_stats_golden(cdr):
     assert round(cells_per_day / days, 3) == float(rows["average_daily_unique_cell_id"])
 
 
-def test_geojson_golden_unmerged(spark, cdr, towers):
+def test_geojson_golden_unmerged(spark, cdr, towers, goldens):
     """The reference's japan._joined_ADMIN1.json golden is the Japan
     prefecture layer UNCHANGED: its merge body is a disabled mock that
     compares admin names against the literal 'Kochi Ken' (quirk Q6,
@@ -224,7 +223,7 @@ def test_geojson_golden_unmerged(spark, cdr, towers):
 
     from cdr_analysis_tools_hadoop_spark.operators import geojson as gj
 
-    golden = _json.load(open(f"{GOLDENS}/japan._joined_ADMIN1.json"))
+    golden = _json.load(open(f"{goldens}/japan._joined_ADMIN1.json"))
     stats = (
         cdr.join(
             F.broadcast(towers.select("cell_id", "admin1").distinct()), "cell_id"

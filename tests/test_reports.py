@@ -17,15 +17,12 @@ from cdr_analysis_tools_hadoop_spark import reports
 from cdr_analysis_tools_hadoop_spark.operators import prepare
 from cdr_analysis_tools_hadoop_spark.sources import csv_io
 
-SAMPLES = "/root/reference/Sample_Inputs"
-GOLDENS = "/root/reference/Statistics/output_reports"
-
 
 @pytest.fixture(scope="module")
-def sample_cdr(spark):
+def sample_cdr(spark, reference_dir):
     raw = csv_io.read_csv_all_string(
         spark,
-        f"{SAMPLES}/cdr_sample.csv",
+        f"{reference_dir}/Sample_Inputs/cdr_sample.csv",
         ["SUBID", "CDATE", "CTIME", "DURATION", "CELLID",
          "LATITUDE", "LONGITUDE", "network_type", "call_type"],
         header=True,
@@ -53,8 +50,8 @@ def series(sample_cdr):
     return reports.graph_series(sample_cdr)
 
 
-def _golden_all_rows():
-    with open(f"{GOLDENS}/css_provider_data_stat_daily.csv", newline="") as f:
+def _golden_all_rows(goldens):
+    with open(f"{goldens}/css_provider_data_stat_daily.csv", newline="") as f:
         rows = [r for r in csv.reader(f) if r]
     hdr = rows[0]
     out = {}
@@ -65,10 +62,10 @@ def _golden_all_rows():
     return out
 
 
-def test_daily_series_match_reference_goldens(series):
+def test_daily_series_match_reference_goldens(series, goldens):
     """The three count series equal the golden daily CSV's ALL/ALL
     rows (values parsed from the reference's file, not re-hardcoded)."""
-    g = _golden_all_rows()
+    g = _golden_all_rows(goldens)
     want_days = sorted(g)
     for name, col in [
         ("daily_cdrs", "total_records"),

@@ -135,6 +135,21 @@ def test_pipeline_end_to_end(spark):
     assert len(zones) > 5  # anchors spread across many Voronoi zones
 
 
+def test_pipeline_fused_equals_staged(spark):
+    """The fused mapInArrow kernel and the composed operator chain
+    (decode_validate -> with_anchor -> pip_join -> tile -> agg) give
+    the same (zone, tile) rollup, row for row."""
+    images = synthetic.images_df(spark, 400, partitions=4)
+    fused = pipeline.run_pipeline(spark, images)
+    staged = pipeline.run_pipeline_staged(spark, images)
+    assert sorted(fused.columns) == sorted(staged.columns)
+    cols = sorted(fused.columns)
+    got = sorted(tuple(r) for r in fused.select(*cols).collect())
+    want = sorted(tuple(r) for r in staged.select(*cols).collect())
+    assert len(got) > 5
+    assert got == want
+
+
 def test_multimodal_resize_box(spark):
     from cdr_analysis_tools_hadoop_spark.operators import multimodal
     from cdr_analysis_tools_hadoop_spark.sources import synthetic

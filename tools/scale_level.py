@@ -2,41 +2,31 @@
 
 This is the north rule's deployment shape verbatim:
 
-  taskset -c 0-{N-1} spark-submit --master local[N] \
+  taskset -c <N cpus> spark-submit --master local[N] \
       --driver-memory 24g --py-files dist/engine.zip \
-      tools/scale_level.py <images_parquet> <repeats> <max_attempts> \
-      <steal_max_pct> <backoff_s>
+      tools/scale_level.py <images_parquet> <repeats> <max_attempts>
 
 The engine package is imported FROM THE ZIP, not the repo checkout:
 this file lives in tools/ (which contains no package), so a successful
 import proves dist/engine.zip is complete and self-contained — the
 import origin is asserted and printed so the bench report can record
-it. Timing protocol (owned by tools/scaling_bench.py, which launches
-this): 2 warm-ups, then timed runs with per-run /proc/stat steal
-telemetry until `repeats` clean runs or `max_attempts`.
+it. Timing: 2 warm-ups, then tools/timing.py's steal-gated protocol
+(imported from this directory, which holds no engine code); prints
+one ``RESULT`` JSON line with the attempts, the summary seconds and the
+dirty flag.
 """
 
 from __future__ import annotations
 
 import json
 import sys
-import time
 
 from pyspark.sql import SparkSession
 
-
-def _cpu() -> list[int]:
-    with open("/proc/stat") as f:
-        return list(map(int, f.readline().split()[1:]))
+import timing
 
 
-def main(
-    img_path: str,
-    repeats: int,
-    max_attempts: int,
-    steal_max_pct: float,
-    backoff_s: float,
-) -> None:
+def main(img_path: str, repeats: int, max_attempts: int) -> None:
     import cdr_analysis_tools_hadoop_spark as engine
     from cdr_analysis_tools_hadoop_spark import pipeline
     from cdr_analysis_tools_hadoop_spark.session import engine_conf
@@ -62,40 +52,15 @@ def main(
     for _ in range(2):
         pipeline.run_pipeline(spark, images).count()
 
-    attempts: list[dict] = []
-    n_clean = 0
-    while n_clean < repeats and len(attempts) < max_attempts:
-        a = _cpu()
-        t0 = time.time()
-        pipeline.run_pipeline(spark, images).count()
-        dt = time.time() - t0
-        b = _cpu()
-        d = [y - x for x, y in zip(a, b)]
-        busy = d[0] + d[1] + d[2] + d[5] + d[6]  # user nice sys irq softirq
-        steal = d[7]
-        steal_pct = 100.0 * steal / max(steal + busy, 1)
-        clean = steal_pct <= steal_max_pct
-        attempts.append(
-            {
-                "sec": round(dt, 2),
-                "steal_pct": round(steal_pct, 1),
-                "clean": clean,
-            }
-        )
-        if clean:
-            n_clean += 1
-        else:
-            time.sleep(backoff_s)
-    print("RESULT " + json.dumps(attempts))
+    attempts, sec, dirty = timing.timed_clean(
+        lambda: pipeline.run_pipeline(spark, images).count(),
+        repeats,
+        max_attempts,
+    )
+    print("RESULT " + json.dumps({"attempts": attempts, "sec": sec, "dirty": dirty}))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 6:
+    if len(sys.argv) != 4:
         raise SystemExit(__doc__)
-    main(
-        sys.argv[1],
-        int(sys.argv[2]),
-        int(sys.argv[3]),
-        float(sys.argv[4]),
-        float(sys.argv[5]),
-    )
+    main(sys.argv[1], int(sys.argv[2]), int(sys.argv[3]))

@@ -15,11 +15,12 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 import urllib.request
 from datetime import datetime, timezone
+
+from timing import timed, timed_clean
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -50,55 +51,6 @@ def _jvm_peak_rss_gib() -> float:
         except OSError:
             continue
     return round(best, 2)
-
-
-def _cpu_counters() -> tuple[int, int]:
-    """(busy, steal) jiffies from /proc/stat, whole box."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(v) for v in parts[1:9]]
-    idle = vals[3] + vals[4]
-    steal = vals[7]
-    busy = sum(vals) - idle - steal
-    return busy, steal
-
-
-def _timed_clean(fn, repeats: int = 3, max_attempts: int = 8,
-                 steal_max_pct: float = 2.0):
-    """Run ``fn`` until ``repeats`` runs with hypervisor steal <=
-    ``steal_max_pct`` of busy time (same clean-window protocol as
-    tools/scaling_bench.py). Returns (attempts, clean_list, dirty)."""
-    attempts: list[dict] = []
-    while len([a for a in attempts if a["clean"]]) < repeats and len(
-        attempts
-    ) < max_attempts:
-        b0, s0 = _cpu_counters()
-        t0 = time.time()
-        fn()
-        dt = time.time() - t0
-        b1, s1 = _cpu_counters()
-        steal_pct = 100.0 * (s1 - s0) / max((s1 - s0) + (b1 - b0), 1)
-        attempts.append(
-            {"sec": round(dt, 2), "steal_pct": round(steal_pct, 1),
-             "clean": steal_pct <= steal_max_pct}
-        )
-    clean = [a["sec"] for a in attempts if a["clean"]]
-    dirty = len(clean) < 2
-    return attempts, (clean or [a["sec"] for a in attempts]), dirty
-
-
-def _timed(fn) -> tuple[float, float]:
-    """(seconds, steal_pct) for one run of ``fn`` — the analytics
-    entries run once (they are minutes-long), so per-entry steal
-    telemetry is what lets a reader discount a contaminated number."""
-    b0, s0 = _cpu_counters()
-    t0 = time.time()
-    fn()
-    dt = time.time() - t0
-    b1, s1 = _cpu_counters()
-    return round(dt, 2), round(
-        100.0 * (s1 - s0) / max((s1 - s0) + (b1 - b0), 1), 1
-    )
 
 
 def _spill_bytes(ui_port: int) -> tuple[int, int]:
@@ -154,10 +106,11 @@ def main() -> None:
     images = spark.read.parquet(img_path)
 
     pipeline.run_pipeline(spark, images).count()  # warm-up
-    attempts, clean, dirty = _timed_clean(
-        lambda: pipeline.run_pipeline(spark, images).count()
+    attempts, med, dirty = timed_clean(
+        lambda: pipeline.run_pipeline(spark, images).count(),
+        repeats=3,
+        max_attempts=8,
     )
-    med = statistics.median(clean)
     results["image_pipeline_sec"] = round(med, 2)
     results["images_per_sec"] = round(n_images / med, 1)
     results["image_pipeline_attempts"] = attempts
@@ -168,7 +121,7 @@ def main() -> None:
         spark, 20_000_000, hot_uid_frac=0.25, partitions=128
     ).localCheckpoint()
     home = trajectory.user_home_site(sited)
-    results["od_hot_uid_20m_sec"], results["od_hot_uid_20m_steal"] = _timed(
+    results["od_hot_uid_20m_sec"], results["od_hot_uid_20m_steal"] = timed(
         lambda: trajectory.od_sum(trajectory.od_edges(sited, home)).count()
     )
 
@@ -179,7 +132,7 @@ def main() -> None:
     pts = synthetic.points_df(
         spark, 40_000_000, hotspot_frac=0.3, partitions=128
     ).localCheckpoint()
-    results["pip_hotspot_40m_sec"], results["pip_hotspot_40m_steal"] = _timed(
+    results["pip_hotspot_40m_sec"], results["pip_hotspot_40m_steal"] = timed(
         lambda: spatial_join.pip_join(pts, polys, out_col="zone")
         .filter("zone is not null")
         .count()
@@ -189,7 +142,7 @@ def main() -> None:
     # corpus-size-aware near-dup scale mode at the tight 0.9 threshold
     emb = synthetic.embeddings_df(spark, 200_000, partitions=64).localCheckpoint()
     nd_box = {}
-    results["near_dup_scaled_200k_sec"], results["near_dup_scaled_200k_steal"] = _timed(
+    results["near_dup_scaled_200k_sec"], results["near_dup_scaled_200k_steal"] = timed(
         lambda: nd_box.__setitem__(
             "n",
             similarity.near_dup_pairs_scaled(
@@ -208,9 +161,9 @@ def main() -> None:
         box["pairs"] = dedup.minhash_lsh_pairs(docs).localCheckpoint()
         box["n"] = box["pairs"].count()
 
-    results["minhash_lsh_50k_docs_sec"], results["minhash_lsh_50k_docs_steal"] = _timed(_minhash)
+    results["minhash_lsh_50k_docs_sec"], results["minhash_lsh_50k_docs_steal"] = timed(_minhash)
     results["minhash_lsh_50k_docs_pairs"] = box["n"]
-    results["dedup_clusters_50k_sec"], results["dedup_clusters_50k_steal"] = _timed(
+    results["dedup_clusters_50k_sec"], results["dedup_clusters_50k_steal"] = timed(
         lambda: box.__setitem__(
             "nc",
             dedup.dedup_clusters(docs, pairs=box["pairs"])
@@ -247,7 +200,7 @@ def main() -> None:
         .select("id", "h")
     ).localCheckpoint()
     hd_box = {}
-    results["hamming_near_dup_2m_sec"], results["hamming_near_dup_2m_steal"] = _timed(
+    results["hamming_near_dup_2m_sec"], results["hamming_near_dup_2m_steal"] = timed(
         lambda: hd_box.__setitem__(
             "n",
             similarity.hamming_near_dup(
@@ -261,6 +214,10 @@ def main() -> None:
     results["memory_spilled_gib"] = round(mem_sp / 1024**3, 2) if mem_sp >= 0 else None
     results["disk_spilled_gib"] = round(disk_sp / 1024**3, 2) if disk_sp >= 0 else None
     results["jvm_peak_rss_gib"] = _jvm_peak_rss_gib()
+    # the single-run timed() entries come back unrounded
+    results = {
+        k: round(v, 2) if isinstance(v, float) else v for k, v in results.items()
+    }
 
     md = os.path.join(ROOT, "BENCH", "SF1.md")
     with open(md, "w") as f:

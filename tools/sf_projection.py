@@ -8,10 +8,8 @@ evidence, and the sf10 wall-clock projection follows from it. The
 non-image axes (OD, PIP, exact Hamming near-dup) scale through the
 deterministic in-memory generators, also at three points each.
 
-Protocol: steal-clean medians for the image pipeline (same clean-
-window rule as tools/scaling_bench.py), single runs with per-entry
-steal telemetry for the minutes-long analytics entries, spill from
-the REST API, peak RSS from the JVM's VmHWM.
+Protocol: steal-clean medians (tools/timing.py) for every scale
+point, spill from the REST API, peak RSS from the JVM's VmHWM.
 
 Writes BENCH/SF10_PROJECTION.md and prints one JSON line.
 
@@ -23,21 +21,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import statistics
 import sys
 import time
 from datetime import datetime, timezone
 
+from sf1_bench import _jvm_peak_rss_gib, _spill_bytes  # sibling tool
+from timing import timed_clean
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-
-from sf1_bench import (  # noqa: E402  (sibling tool, shared protocol)
-    _cpu_counters,
-    _jvm_peak_rss_gib,
-    _spill_bytes,
-    _timed,
-    _timed_clean,
-)
 
 
 def main() -> None:
@@ -84,11 +76,11 @@ def main() -> None:
         gen_sec = round(time.time() - t0, 1)
         images = spark.read.parquet(path)
         pipeline.run_pipeline(spark, images).count()  # warm-up
-        attempts, clean, dirty = _timed_clean(
+        attempts, med, dirty = timed_clean(
             lambda: pipeline.run_pipeline(spark, images).count(),
             repeats=3,
+            max_attempts=8,
         )
-        med = statistics.median(clean)
         img_rows.append(
             {
                 "n_images": n,
@@ -111,8 +103,7 @@ def main() -> None:
         shared host vary 2-4x under co-tenant bursts, which would read
         as fake superlinearity in a marginal-cost table."""
         fn()  # warm-up (JVM + page cache)
-        attempts, clean, dirty = _timed_clean(fn, repeats=2)
-        med = statistics.median(clean)
+        attempts, med, dirty = timed_clean(fn, repeats=2, max_attempts=8)
         row = {
             "sec": round(med, 2),
             "attempts": attempts,
@@ -450,8 +441,8 @@ the linear-scaling evidence; the sf10 projection follows from it.
 
 {_tbl(img_rows, 'usec_per_image', 'n_images')}
 
-All timings are steal-clean medians (<=2% steal, same clean-window
-protocol as scaling_bench), with every attempt listed — single runs
+All timings are steal-clean medians (<=2% steal, the clean-window
+protocol of tools/timing.py), with every attempt listed — single runs
 on this shared host vary 2-4x under co-tenant bursts, which would
 read as fake super/sub-linearity in a marginal-cost table.
 
